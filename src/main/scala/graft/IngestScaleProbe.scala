@@ -27,7 +27,9 @@ import org.apache.spark.sql.SparkSession
   */
 object IngestScaleProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/repo/testdata/sf100")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", sys.error(
+      "IngestScaleProbe needs SPARK_GRAFT_SF_DIR: the scale-factor directory " +
+        "(an sf100 corpus) the m13 fixture is built from"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
     val spark = GraftSession.tune(SparkSession.builder().master(s"local[$cpus]"))

@@ -12,7 +12,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.tune(SparkSession.builder().master("local[32]")).getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
+    val spark = GraftSession.tune(SparkSession.builder().master(s"local[$cpus]")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/region.parquet").count()
 
@@ -87,8 +89,8 @@ object Prof {
           val out = fn(spark, sfDir)
           val hashed = out.select(xxhash64(struct(out.columns.map(col): _*)).as("h"))
             .agg(max(col("h")))
-          // plans/r20 deliverable: the formatted physical plan of the gate's
-          // hashed action (the exact plan the bench times), written once
+          // the formatted physical plan of the gate's hashed action (the
+          // exact plan the bench times), written once
           for (dir <- sys.env.get("SPARK_GRAFT_PLANDIR") if rep == 1) {
             val suffix = sys.env.getOrElse("SPARK_GRAFT_PLANSUFFIX", "before")
             java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))

@@ -302,13 +302,15 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // Spark's JoinEstimation falls back to a row-product estimate when
     // one join side has min/max and the other doesn't
     val agg = ManifestStats.aggregate(files.filter(_.recordCount > 0))
-    m.schema.fields.iterator.map { f =>
+    // Catalyst's FilterEstimation evaluates a range predicate on any column
+    // that has a ColumnStat, and its type match has no TIMESTAMP_NTZ case
+    // (a MatchError fails the query): those columns declare no stats
+    m.schema.fields.iterator.filterNot(_.dataType == TimestampNTZType).map { f =>
       val s = agg.get(ColumnMapping.physicalOf(m.schema, f.name))
       val (mn, mx) = s.map(cs => GraftTable.catalystBounds(f.dataType, cs))
         .getOrElse((None, None))
       val width = f.dataType match {
-        case dt @ (_: NumericType | _: DateType | _: TimestampType |
-                   _: TimestampNTZType | _: BooleanType) =>
+        case dt @ (_: NumericType | _: DateType | _: TimestampType | _: BooleanType) =>
           Some(dt.defaultSize.toLong)
         case _ => None
       }
@@ -657,12 +659,11 @@ class GraftTable(val spark: SparkSession, val location: String) {
     */
   private def currentStats(m: TableMeta): Option[StatsPayload] = {
     def reachable(statsSnap: Long): Boolean = {
-      val rowPreserving = Set("replace", "rewrite-deletes")
       var cur = m.currentSnapshotId
       while (cur.isDefined) {
         if (cur.get == statsSnap) return true
         val s = m.snapshot(cur.get)
-        if (s.isEmpty || !rowPreserving.contains(s.get.operation)) return false
+        if (s.isEmpty || !CommitOp.RowPreserving(s.get.operation)) return false
         cur = s.get.parentId
       }
       false
@@ -904,7 +905,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
         // changelog skips them, like Iceberg's changelog scan skips
         // replace snapshots — a consumer must survive maintenance running
         // between its polls.
-        case "rewrite-deletes" | "replace" =>
+        case op if CommitOp.RowPreserving(op) =>
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
             StructType(m.schema.fields :+ StructField("_change_type", StringType)))
         // Copy-on-write commits don't retain row-level lineage, but they
@@ -1085,15 +1086,11 @@ class GraftTable(val spark: SparkSession, val location: String) {
 
   private def partitionStats(m: TableMeta): Option[PartitionStatsPayload] = {
     def reachable(statsSnap: Long): Boolean = {
-      val filePreserving = Set("delete-mor", "delete-mor-pos", "delete-mor-eq")
       var cur = m.currentSnapshotId
       while (cur.isDefined) {
         if (cur.get == statsSnap) return true
         val s = m.snapshot(cur.get)
-        val preserves = s.exists(x => filePreserving.contains(x.operation) ||
-          // delete-file compaction folds delete files, data files untouched
-          (x.operation == "rewrite-deletes" && x.addedFiles == 0))
-        if (!preserves) return false
+        if (!s.exists(CommitOp.preservesFiles)) return false
         cur = s.get.parentId
       }
       false
@@ -1218,41 +1215,97 @@ class GraftTable(val spark: SparkSession, val location: String) {
     (listName, reused.result() ++ fresh)
   }
 
-  private def commitSnapshot(m: TableMeta, files: Seq[DataFile], op: String,
-      added: Long, parentOverride: Option[Long] = None,
-      deletePredicates: Seq[String] = Nil,
-      positionDeleteFiles: Seq[String] = Nil,
-      equalityDeletes: Seq[EqualityDelete] = Nil,
-      extraProperties: Map[String, String] = Map.empty): TableMeta = {
-    // optimistic concurrency: fail fast when a commit landed after this
-    // operation read its base metadata (the CAS in commitMeta is the
-    // authoritative check; this avoids writing manifests we'd discard)
-    MetaIO.currentVersion(conf, location).foreach { v =>
-      if (v != m.version)
-        throw new java.util.ConcurrentModificationException(
-          s"commit conflict at $location: base version ${m.version}, current $v")
+  /** How a writer that lost the version race may rebase onto the
+    * commits that won it. Each writer declares one; [[commit]] applies it.
+    */
+  private sealed trait Rebase
+  private object Rebase {
+    /** Refuse every concurrent commit. */
+    case object Never extends Rebase
+    /** Rebase unless a winner changed the schema or partition spec, or
+      * left predicate deletes that would capture the new rows.
+      */
+    case object Append extends Rebase
+    /** [[Append]], and only when every winner changed files, not rows
+      * ([[CommitOp.RowPreserving]]): the equality delete then selects the
+      * same logical rows on the winner's files.
+      */
+    case object RowDelta extends Rebase
+  }
+
+  /** One snapshot's content: the full manifest (data files plus the
+    * merge-on-read delete state it carries), how many data files it
+    * added, and properties committed in the same metadata version.
+    */
+  private case class Change(manifest: ManifestData, added: Long,
+      properties: Map[String, String] = Map.empty)
+
+  /** The commit path every snapshot-producing writer goes through. Each
+    * attempt builds the snapshot content with `change` against its base,
+    * refuses early when the table already moved past that base (a lost
+    * race writes no manifests), writes the manifest list, and CAS-publishes
+    * the next version with the new snapshot as main's head — or as the
+    * head of `branch`, which leaves main alone. A lost race ends the
+    * operation with the ConcurrentModificationException unless the
+    * writer's `rebase` rule accepts the winners; then `change` runs again
+    * on the fresh base (re-stamping sequence numbers and re-folding stats),
+    * at most `commit.retry.num-retries` times.
+    */
+  private def commit(base: TableMeta, op: String, rebase: Rebase = Rebase.Never,
+      onAttempt: Int => Unit = _ => (), parent: Option[Long] = None,
+      branch: Option[String] = None)(change: TableMeta => Change): TableMeta = {
+    val retries = base.properties.get(TableFormat.CommitRetries).map(_.toInt).getOrElse(4)
+    def attempt(m: TableMeta, n: Int): TableMeta = {
+      onAttempt(n) // test seam: deterministic mid-flight conflicts
+      val c = change(m)
+      try {
+        // branch staging never paid this probe; the CAS still refuses it
+        if (branch.isEmpty) MetaIO.currentVersion(conf, location).foreach { v =>
+          if (v != m.version)
+            throw new java.util.ConcurrentModificationException(
+              s"commit conflict at $location: base version ${m.version}, current $v")
+        }
+        // crash seam: the operation's data/delete files are durable on
+        // disk, nothing references them yet (see MetaIO.commitFault)
+        MetaIO.faultPoint("data-files-written")
+        val snapId = nextSnapshotId(m)
+        val parentId = parent.orElse(m.currentSnapshotId)
+        val md = c.manifest
+        val (listName, entries) =
+          buildManifestList(m, parentId.flatMap(m.snapshot), md.files, snapId)
+        MetaIO.writeString(conf, s"${MetaIO.metadataDir(location)}/$listName",
+          MetaIO.manifestListToJson(entries, md.deletePredicates,
+            md.positionDeleteFiles, md.equalityDeletes))
+        // crash seam: manifest + manifest-list durable, version not published
+        MetaIO.faultPoint("manifests-written")
+        // branch snapshots have always carried the default schema id
+        val snap = Snapshot(snapId, parentId, System.currentTimeMillis(), op,
+          listName, c.added, md.files.size, md.files.map(_.recordCount).sum,
+          schemaId = if (branch.isEmpty) m.currentSchemaId else 0)
+        val next = m.copy(version = m.version + 1, snapshots = m.snapshots :+ snap,
+          properties = m.properties ++ c.properties)
+        val published = branch match {
+          case None => next.copy(currentSnapshotId = Some(snapId))
+          case Some(b) => next.copy(refs = m.refs + (b -> Ref("branch", snapId)))
+        }
+        publish(published)
+        published
+      } catch {
+        case e: java.util.ConcurrentModificationException
+            if rebase != Rebase.Never && n < retries =>
+          val fresh = meta
+          val known = m.snapshots.map(_.id).toSet
+          // a metadata-only winner (a property commit) adds no snapshot
+          // and so passes the row-delta test
+          if (fresh.schema != m.schema || fresh.currentSpecId != m.currentSpecId ||
+              (rebase == Rebase.RowDelta && !fresh.snapshots.forall(s =>
+                known.contains(s.id) || CommitOp.RowPreserving(s.operation))) ||
+              currentManifest(fresh).deletePredicates.nonEmpty)
+            throw e
+          attempt(fresh, n + 1)
+      }
     }
-    // crash seam: the operation's data/delete files are durable on disk,
-    // nothing references them yet (see MetaIO.commitFault)
-    MetaIO.faultPoint("data-files-written")
-    val snapId = nextSnapshotId(m)
-    val parentId = parentOverride.orElse(m.currentSnapshotId)
-    val (listName, entries) =
-      buildManifestList(m, parentId.flatMap(m.snapshot), files, snapId)
-    MetaIO.writeString(conf, s"${MetaIO.metadataDir(location)}/$listName",
-      MetaIO.manifestListToJson(entries, deletePredicates, positionDeleteFiles,
-        equalityDeletes))
-    // crash seam: manifest + manifest-list durable, version not published
-    MetaIO.faultPoint("manifests-written")
-    val snap = Snapshot(snapId, parentId,
-      System.currentTimeMillis(), op,
-      listName, added, files.size, files.map(_.recordCount).sum,
-      schemaId = m.currentSchemaId)
-    val next = m.copy(version = m.version + 1, snapshots = m.snapshots :+ snap,
-      currentSnapshotId = Some(snapId),
-      properties = m.properties ++ extraProperties)
-    publish(next)
-    next
+    attempt(base, 0)
   }
 
   private def commitMetadataOnly(next: TableMeta): TableMeta = {
@@ -1390,8 +1443,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
     * version file directly — the catalog becomes the single commit
     * arbiter (reference interoperability.md:5, the "register a catalog"
     * integration leg). The delegate throws
-    * `ConcurrentModificationException` on conflict, which the existing
-    * append rebase-and-retry loop handles unchanged.
+    * `ConcurrentModificationException` on conflict, which [[commit]]'s
+    * rebase rules handle unchanged.
     */
   @volatile private[graft] var commitDelegate: Option[TableMeta => Unit] = None
 
@@ -1599,10 +1652,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
   def deleteMergeOnRead(cond: String): GraftTable = {
     val m = meta
     val md = currentManifest(m)
-    commitSnapshot(m, md.files, "delete-mor", 0,
-      deletePredicates = md.deletePredicates :+ cond,
-      positionDeleteFiles = md.positionDeleteFiles,
-      equalityDeletes = md.equalityDeletes)
+    commit(m, "delete-mor") { _ =>
+      Change(md.copy(deletePredicates = md.deletePredicates :+ cond), 0) }
     this
   }
 
@@ -1632,10 +1683,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // nothing matched -> no commit at all (an empty delete-mor-pos
     // snapshot would break changelog consumers reading the file diff)
     if (written.isEmpty) return this
-    commitSnapshot(m, md.files, "delete-mor-pos", 0,
-      deletePredicates = md.deletePredicates,
-      positionDeleteFiles = md.positionDeleteFiles ++ written,
-      equalityDeletes = md.equalityDeletes)
+    commit(m, "delete-mor-pos") { _ =>
+      Change(md.copy(positionDeleteFiles = md.positionDeleteFiles ++ written), 0) }
     this
   }
 
@@ -1668,10 +1717,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
         fs
     }
     if (written.isEmpty) return this
-    commitSnapshot(m, md.files, "delete-mor-pos", 0,
-      deletePredicates = md.deletePredicates,
-      positionDeleteFiles = md.positionDeleteFiles ++ written,
-      equalityDeletes = md.equalityDeletes)
+    commit(m, "delete-mor-pos") { _ =>
+      Change(md.copy(positionDeleteFiles = md.positionDeleteFiles ++ written), 0) }
     this
   }
 
@@ -1730,12 +1777,10 @@ class GraftTable(val spark: SparkSession, val location: String) {
     keyDf.write.parquet(delDir)
     val delFiles = listParquet(delDir)
     Pq.register(delFiles, keyDf.schema)
-    commitSnapshot(m, md.files, "delete-mor-eq", 0,
-      deletePredicates = md.deletePredicates,
-      positionDeleteFiles = md.positionDeleteFiles,
-      equalityDeletes = md.equalityDeletes :+
+    commit(m, "delete-mor-eq") { _ =>
+      Change(md.copy(equalityDeletes = md.equalityDeletes :+
         EqualityDelete(keyCols, delFiles, nextSnapshotId(m),
-          eqDeleteStats(delFiles, keyCols, m)))
+          eqDeleteStats(delFiles, keyCols, m))), 0) }
     this
   }
 
@@ -1797,7 +1842,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // append()/appendToBranch invariant that new rows are never hit by
     // older merge-on-read predicates. Materialize them first.
     if (currentManifest().deletePredicates.nonEmpty) { materializeDeletes(); () }
-    var m = meta
+    val m = meta
     val delDir = s"$location/deletes/${UUID.randomUUID().toString.take(8)}"
     val upsertKeys = upserts.select(keyColsStamped(keyCols, m.schema): _*)
     val keyUnion = deletedKeys.map(d => upsertKeys.unionByName(
@@ -1843,39 +1888,14 @@ class GraftTable(val spark: SparkSession, val location: String) {
       if (distinctKeys < written.map(_.recordCount).sum)
         requireUniqueMergeKeys(upserts, keyCols, "source")
     }
-    val retries = m.properties.get(TableFormat.CommitRetries)
-      .map(_.toInt).getOrElse(4)
-    val rowPreserving = Set("replace", "rewrite-deletes")
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      onAttempt(attempt) // test seam: deterministic mid-flight conflicts
+    commit(m, "upsert-mor", Rebase.RowDelta, onAttempt) { m =>
       val md = currentManifest(m)
       val seq = nextSnapshotId(m)
       val newFiles = written.map(_.copy(seq = seq))
-      try {
-        commitSnapshot(m, md.files ++ newFiles, "upsert-mor", newFiles.size,
-          deletePredicates = md.deletePredicates,
-          positionDeleteFiles = md.positionDeleteFiles,
-          equalityDeletes = md.equalityDeletes :+
-            EqualityDelete(keyCols, delFiles, seq, delStats),
-          extraProperties = extraProperties)
-        committed = true
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          val fresh = meta
-          val newSince = fresh.snapshots
-            .filterNot(s => m.snapshots.exists(_.id == s.id))
-          // an empty newSince is a pure metadata-version race (property
-          // commit) — always safe to rebase onto
-          if (attempt > retries || fresh.schema != m.schema ||
-              fresh.currentSpecId != m.currentSpecId ||
-              !newSince.forall(s => rowPreserving.contains(s.operation)) ||
-              currentManifest(fresh).deletePredicates.nonEmpty)
-            throw e
-          m = fresh
-      }
+      Change(md.copy(files = md.files ++ newFiles,
+        equalityDeletes = md.equalityDeletes :+
+          EqualityDelete(keyCols, delFiles, seq, delStats)),
+        newFiles.size, extraProperties)
     }
     this
   }
@@ -1940,9 +1960,12 @@ class GraftTable(val spark: SparkSession, val location: String) {
       else if (lineagePreserving(m))
         writeDataFiles(lineageScan(m, md, touched), m)
       else writeDataFiles(readWithMor(m, md.copy(files = touched), None), m)
-    val untouched = md.files.filterNot(f => touched.exists(_.path == f.path))
-    commitSnapshot(m, untouched ++ rewritten, "rewrite-deletes", rewritten.size,
-      extraProperties = if (rewritten.isEmpty) Map.empty else lineageMarker(m))
+    val touchedPaths = touched.map(_.path).toSet
+    val untouched = md.files.filterNot(f => touchedPaths.contains(f.path))
+    commit(m, "rewrite-deletes") { _ =>
+      Change(ManifestData(untouched ++ rewritten, Nil, Nil), rewritten.size,
+        if (rewritten.isEmpty) Map.empty else lineageMarker(m))
+    }
     this
   }
 
@@ -2008,9 +2031,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
         EqualityDelete(cols, folded, seq, eqDeleteStats(folded, cols, m))
       } else EqualityDelete(cols, files, seq, es.head.stats)
     }.toSeq
-    commitSnapshot(m, md.files, "rewrite-deletes", 0,
-      deletePredicates = md.deletePredicates,
-      positionDeleteFiles = newPos, equalityDeletes = newEq)
+    commit(m, "rewrite-deletes") { _ =>
+      Change(md.copy(positionDeleteFiles = newPos, equalityDeletes = newEq), 0) }
     this
   }
 
@@ -2055,15 +2077,15 @@ class GraftTable(val spark: SparkSession, val location: String) {
       onAttempt: Int => Unit = _ => (),
       extraProperties: Map[String, String] = Map.empty): GraftTable = {
     if (currentManifest().deletePredicates.nonEmpty) { materializeDeletes(); () }
-    var m = meta
-    val written = writeDataFiles(df, m)
+    val m0 = meta
+    val written = writeDataFiles(df, m0)
     // Puffin fold: when live ANALYZE stats exist, sketch the APPENDED rows
     // once (one extra O(batch) agg — never a table rescan) so the commit
     // can merge them in and re-stamp; NDV stays live under ingest
     val incoming: Option[(Int, Map[String, Array[Long]])] =
-      currentStats(m).flatMap { sp =>
+      currentStats(m0).flatMap { sp =>
         val live = sp.sketches.keys.toSeq.sorted.flatMap(phys =>
-          m.schema.fields.find(f => ColumnMapping.physicalName(f) == phys)
+          m0.schema.fields.find(f => ColumnMapping.physicalName(f) == phys)
             .map(f => f.name -> phys))
         if (live.isEmpty) None else Some(sp.k -> computeSketches(df, live, sp.k))
       }
@@ -2072,12 +2094,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // in hand from the write) merge into the live payload — no manifest
     // rescan at any table size
     val incomingParts: Seq[PartitionStatEntry] = partitionEntriesOf(written)
-    val retries = m.properties.get(TableFormat.CommitRetries)
-      .map(_.toInt).getOrElse(4)
-    var attempt = 0
-    var committed = false
-    while (!committed) {
-      onAttempt(attempt) // test seam: deterministic mid-flight conflicts
+    commit(m0, "append", Rebase.Append, onAttempt) { m =>
       val md = currentManifest(m)
       val seq = nextSnapshotId(m)
       val newFiles = written.map(_.copy(seq = seq))
@@ -2109,22 +2126,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
         Map(TableFormat.PartStatsSnapshot -> seq.toString,
           TableFormat.PartStatsFile -> name)
       }.getOrElse(Map.empty)
-      try {
-        commitSnapshot(m, md.files ++ newFiles, "append", newFiles.size,
-          positionDeleteFiles = md.positionDeleteFiles,
-          equalityDeletes = md.equalityDeletes,
-          extraProperties = extraProperties ++ statsProps ++ partStatsProps)
-        committed = true
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          val fresh = meta
-          if (attempt > retries || fresh.schema != m.schema ||
-              fresh.currentSpecId != m.currentSpecId ||
-              currentManifest(fresh).deletePredicates.nonEmpty)
-            throw e
-          m = fresh
-      }
+      Change(md.copy(files = md.files ++ newFiles, deletePredicates = Nil),
+        newFiles.size, extraProperties ++ statsProps ++ partStatsProps)
     }
     this
   }
@@ -2164,9 +2167,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // stay pruning-safe but must not serve aggregate-exact answers
     val entries = collectFileEntries(sourceDir, m, m.currentSpecId, format)
       .map(_.copy(seq = nextSnapshotId(m), trustedBounds = false))
-    commitSnapshot(m, md.files ++ entries, "append", entries.size,
-      positionDeleteFiles = md.positionDeleteFiles,
-      equalityDeletes = md.equalityDeletes)
+    commit(m, "append") { _ =>
+      Change(md.copy(files = md.files ++ entries, deletePredicates = Nil), entries.size) }
     this
   }
 
@@ -2179,8 +2181,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
       extraProperties: Map[String, String] = Map.empty): GraftTable = {
     val m = meta
     val newFiles = writeDataFiles(df, m)
-    commitSnapshot(m, newFiles, "overwrite", newFiles.size,
-      extraProperties = extraProperties)
+    commit(m, "overwrite") { _ =>
+      Change(ManifestData(newFiles, Nil, Nil), newFiles.size, extraProperties) }
     this
   }
 
@@ -2210,9 +2212,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
       else None
     val newTuples = newFiles.flatMap(tuple).toSet
     val kept = md.files.filterNot(f => tuple(f).exists(newTuples.contains))
-    commitSnapshot(m, kept ++ newFiles, "overwrite", newFiles.size,
-      positionDeleteFiles = md.positionDeleteFiles,
-      equalityDeletes = md.equalityDeletes)
+    commit(m, "overwrite") { _ =>
+      Change(md.copy(files = kept ++ newFiles, deletePredicates = Nil), newFiles.size) }
     this
   }
 
@@ -2222,7 +2223,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     */
   def truncate(): GraftTable = {
     val m = meta
-    commitSnapshot(m, Nil, "delete", 0)
+    commit(m, "delete") { _ => Change(ManifestData(Nil, Nil, Nil), 0) }
     this
   }
 
@@ -2241,6 +2242,40 @@ class GraftTable(val spark: SparkSession, val location: String) {
     cur.filter(f => hit.contains(f.path))
   }
 
+  /** The copy-on-write rewrite behind DELETE, UPDATE, MERGE, compaction
+    * and clustering: scans the `touched` files (`None` when nothing is
+    * touched), writes what `rows` makes of that scan, and commits `op`
+    * over the rest of `files` plus the new files.
+    *
+    * The scan is defaults-aware: the rewrite MATERIALIZES values into
+    * files that postdate the default boundary, so it must read filled
+    * values (raw nulls would silently erase the default for surviving
+    * rows). Under row-lineage preservation it additionally rides each
+    * row's _row_id / last-updated seq into the new files, and the commit
+    * carries the lineage marker — unless `markEmpty` is false and the
+    * rewrite wrote no file. Row-preserving rewrites re-derive partition
+    * stats when a live payload existed before them.
+    */
+  private def rewriteFiles(m: TableMeta, files: Seq[DataFile],
+      touched: Seq[DataFile], op: String, distribution: Option[String] = None,
+      markEmpty: Boolean = true)(rows: Option[DataFrame] => DataFrame): GraftTable = {
+    val source =
+      if (touched.isEmpty) None
+      else if (lineagePreserving(m)) Some(lineageScan(m, currentManifest(m), touched))
+      else Some(ScanPlanner.scan(spark, m, touched, None))
+    val newFiles = writeDataFiles(rows(source), m, distribution)
+    val touchedPaths = touched.map(_.path).toSet
+    val untouched = files.filterNot(f => touchedPaths.contains(f.path))
+    val marked = touched.nonEmpty && (markEmpty || newFiles.nonEmpty)
+    val hadLive = CommitOp.RowPreserving(op) && partitionStats(m).nonEmpty
+    commit(m, op) { _ =>
+      Change(ManifestData(untouched ++ newFiles, Nil, Nil), newFiles.size,
+        if (marked) lineageMarker(m) else Map.empty)
+    }
+    refreshPartitionStatsIfLive(hadLive)
+    this
+  }
+
   /** Copy-on-write DELETE WHERE. */
   def delete(cond: String): GraftTable = {
     ensureMaterialized()
@@ -2248,20 +2283,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val cur = currentFiles(m)
     val touched = matchingFiles(m, cond)
     if (touched.isEmpty) return this
-    // defaults-aware read: the rewrite MATERIALIZES values into files
-    // that postdate the default boundary, so it must read filled values
-    // (raw nulls would silently erase the default for surviving rows).
-    // Under row-lineage preservation the scan additionally rides each
-    // surviving row's _row_id / last-updated seq into the new files.
-    val base =
-      if (lineagePreserving(m)) lineageScan(m, currentManifest(m), touched)
-      else ScanPlanner.scan(spark, m, touched, None)
-    val kept = base.filter(!coalesce(expr(cond), lit(false)))
-    val rewritten = writeDataFiles(kept, m)
-    val untouchedFiles = cur.filterNot(f => touched.exists(_.path == f.path))
-    commitSnapshot(m, untouchedFiles ++ rewritten, "delete", rewritten.size,
-      extraProperties = if (rewritten.isEmpty) Map.empty else lineageMarker(m))
-    this
+    rewriteFiles(m, cur, touched, "delete", markEmpty = false)(
+      _.get.filter(!coalesce(expr(cond), lit(false))))
   }
 
   /** Copy-on-write UPDATE ... SET (assignments: column -> SQL expr). */
@@ -2272,9 +2295,6 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val touched = matchingFiles(m, cond)
     if (touched.isEmpty) return this
     val preserve = lineagePreserving(m)
-    val base =
-      if (preserve) lineageScan(m, currentManifest(m), touched)
-      else ScanPlanner.scan(spark, m, touched, None) // defaults-aware rewrite
     val hit = coalesce(expr(cond), lit(false))
     // ONE simultaneous projection: the condition and every assignment RHS
     // evaluate against the ORIGINAL row (SQL UPDATE semantics). A
@@ -2292,12 +2312,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
       // updated rows inherit THIS commit's sequence number
       when(hit, lit(null).cast(LongType))
         .otherwise(col(RowLineage.MatSeq)).as(RowLineage.MatSeq)))
-    val updated = base.select(projected: _*)
-    val rewritten = writeDataFiles(updated, m)
-    val untouchedFiles = cur.filterNot(f => touched.exists(_.path == f.path))
-    commitSnapshot(m, untouchedFiles ++ rewritten, "update", rewritten.size,
-      extraProperties = if (rewritten.isEmpty) Map.empty else lineageMarker(m))
-    this
+    rewriteFiles(m, cur, touched, "update", markEmpty = false)(_.get.select(projected: _*))
   }
 
   /** Iceberg's MERGE cardinality check for the merge-on-read path (no
@@ -2388,12 +2403,11 @@ class GraftTable(val spark: SparkSession, val location: String) {
       }
 
     val preserve = lineagePreserving(m)
-    val rewritten: DataFrame = if (touched.isEmpty) null else {
-      val base = // defaults-aware rewrite; preserve-mode rides row ids
-        if (preserve) lineageScan(m, currentManifest(m), touched)
-        else ScanPlanner.scan(spark, m, touched, None)
-      val matched = col(s"__s_${keyCols.head}").isNotNull
-      base.join(srcRenamed, joinCond, "left")
+    val matched = col(s"__s_${keyCols.head}").isNotNull
+    val inserts = source.join(target.select(keyCols.map(col): _*), keyCols, "left_anti")
+      .select(m.schema.fields.map(f => col(f.name)): _*)
+    rewriteFiles(m, cur, touched, "merge") { base =>
+      val rewritten = base.map(_.join(srcRenamed, joinCond, "left")
         .select((m.schema.fields.toSeq.map { f =>
           when(matched, col(s"__s_${f.name}"))
             .otherwise(col(f.name)).as(f.name)
@@ -2401,20 +2415,11 @@ class GraftTable(val spark: SparkSession, val location: String) {
           col(RowLineage.MatRowId),
           // updated rows inherit THIS commit's sequence number
           when(matched, lit(null).cast(LongType))
-            .otherwise(col(RowLineage.MatSeq)).as(RowLineage.MatSeq)))): _*)
+            .otherwise(col(RowLineage.MatSeq)).as(RowLineage.MatSeq)))): _*))
+      // inserted rows carry no riders (null -> inherit the new file's
+      // range at their positions), so the union fills them as missing
+      (rewritten.toSeq :+ inserts).reduce(_.unionByName(_, allowMissingColumns = true))
     }
-    val inserts = source.join(target.select(keyCols.map(col): _*), keyCols, "left_anti")
-      .select(m.schema.fields.map(f => col(f.name)): _*)
-
-    // inserted rows carry no riders (null -> inherit the new file's
-    // range at their positions), so the union fills them as missing
-    val toWrite = (Option(rewritten).toSeq :+ inserts)
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-    val newFiles = writeDataFiles(toWrite, m)
-    val untouchedFiles = cur.filterNot(f => touched.exists(_.path == f.path))
-    commitSnapshot(m, untouchedFiles ++ newFiles, "merge", newFiles.size,
-      extraProperties = if (touched.isEmpty) Map.empty else lineageMarker(m))
-    this
   }
 
   /** Generalized MERGE executor (one copy-on-write commit): `updates`
@@ -2453,13 +2458,10 @@ class GraftTable(val spark: SparkSession, val location: String) {
         cur.filter(f => hit.contains(f.path))
       }
 
+    if (touched.isEmpty && inserts.isEmpty) return this // nothing to do
     val preserve = lineagePreserving(m)
-    val rewritten: Option[DataFrame] =
-      if (touched.isEmpty) None
-      else {
-        val base = // defaults-aware rewrite; preserve-mode rides row ids
-          if (preserve) lineageScan(m, currentManifest(m), touched)
-          else ScanPlanner.scan(spark, m, touched, None)
+    rewriteFiles(m, cur, touched, "merge") { source =>
+      val rewritten = source.map { base =>
         val delKeyed = keyCols.foldLeft(deleteKeys.select(keyCols.map(col): _*)
           .distinct()) { (d, c) => d.withColumnRenamed(c, s"__d_$c") }
         val updRenamed = m.schema.fieldNames.foldLeft(updates) { (d, c) =>
@@ -2471,23 +2473,16 @@ class GraftTable(val spark: SparkSession, val location: String) {
           keyCols.map(c => minusDeleted(c) === updRenamed(s"__u_$c")).reduce(_ && _),
           "left")
         val matched = col(s"__u_${keyCols.head}").isNotNull
-        Some(joined.select((m.schema.fieldNames.toSeq.map { c =>
+        joined.select((m.schema.fieldNames.toSeq.map { c =>
           when(matched, col(s"__u_$c")).otherwise(col(c)).as(c)
         } ++ (if (!preserve) Nil else Seq(
           col(RowLineage.MatRowId),
           when(matched, lit(null).cast(LongType))
-            .otherwise(col(RowLineage.MatSeq)).as(RowLineage.MatSeq)))): _*))
+            .otherwise(col(RowLineage.MatSeq)).as(RowLineage.MatSeq)))): _*)
       }
-
-    if (touched.isEmpty && inserts.isEmpty) return this // nothing to do
-    val toWrite = (rewritten.toSeq :+ inserts.select(
-      m.schema.fieldNames.map(col).toSeq: _*))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-    val newFiles = writeDataFiles(toWrite, m)
-    val untouchedFiles = cur.filterNot(f => touched.exists(_.path == f.path))
-    commitSnapshot(m, untouchedFiles ++ newFiles, "merge", newFiles.size,
-      extraProperties = if (touched.isEmpty) Map.empty else lineageMarker(m))
-    this
+      (rewritten.toSeq :+ inserts.select(m.schema.fieldNames.map(col).toSeq: _*))
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+    }
   }
 
   // ------------------------------------------------------------- refs
@@ -2536,8 +2531,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val ref = m.refs.getOrElse(branch,
       throw new IllegalArgumentException(s"unknown branch: $branch"))
     require(ref.kind == "branch", s"$branch is a ${ref.kind}, not a branch")
-    val head = m.snapshot(ref.snapshotId).get
-    val headMd = manifestDataOf(head)
+    val headMd = manifestDataOf(m.snapshot(ref.snapshotId).get)
     // predicate deletes apply at read time to EVERY file in the manifest —
     // staging new rows under them would silently delete any staged row
     // they match (position deletes are file-anchored, equality deletes
@@ -2545,19 +2539,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
     require(headMd.deletePredicates.isEmpty,
       s"branch $branch head carries merge-on-read predicate deletes; materialize before staging")
     val newFiles = writeDataFiles(df, m)
-    val snapId = nextSnapshotId(m)
-    val (listName, entries) =
-      buildManifestList(m, Some(head), headMd.files ++ newFiles, snapId)
-    MetaIO.writeString(conf, s"${MetaIO.metadataDir(location)}/$listName",
-      MetaIO.manifestListToJson(entries, headMd.deletePredicates,
-        headMd.positionDeleteFiles, headMd.equalityDeletes))
-    val snap = Snapshot(snapId, Some(ref.snapshotId), System.currentTimeMillis(),
-      "append", listName, newFiles.size,
-      headMd.files.size + newFiles.size,
-      (headMd.files ++ newFiles).map(_.recordCount).sum)
-    commitMetadataOnly(m.copy(version = m.version + 1,
-      snapshots = m.snapshots :+ snap,
-      refs = m.refs + (branch -> Ref("branch", snapId))))
+    commit(m, "append", parent = Some(ref.snapshotId), branch = Some(branch)) { _ =>
+      Change(headMd.copy(files = headMd.files ++ newFiles), newFiles.size) }
     this
   }
 
@@ -2619,9 +2602,8 @@ class GraftTable(val spark: SparkSession, val location: String) {
       s"cherry-pick $snapshotId: ${already.size} of its files are already referenced " +
         "by the current snapshot (published or previously picked)")
     val restamped = added.map(_.copy(seq = nextSnapshotId(m)))
-    commitSnapshot(m, md.files ++ restamped, "append", restamped.size,
-      positionDeleteFiles = md.positionDeleteFiles,
-      equalityDeletes = md.equalityDeletes)
+    commit(m, "append") { _ =>
+      Change(md.copy(files = md.files ++ restamped, deletePredicates = Nil), restamped.size) }
     this
   }
 
@@ -2640,10 +2622,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val md = manifestDataOf(snap)
     // history continues from the rollback target: abandoned snapshots stop
     // being current ancestors (reference history table semantics)
-    commitSnapshot(m, md.files, "rollback", 0, parentOverride = Some(snapshotId),
-      deletePredicates = md.deletePredicates,
-      positionDeleteFiles = md.positionDeleteFiles,
-      equalityDeletes = md.equalityDeletes)
+    commit(m, "rollback", parent = Some(snapshotId)) { _ => Change(md, 0) }
     this
   }
 
@@ -2821,17 +2800,7 @@ class GraftTable(val spark: SparkSession, val location: String) {
     // do the same); once no pre-add file remains, fastMinMax serves
     // again. Lineage-preserving tables carry each row's id through the
     // repack — compaction reorders rows, so inheritance alone can't.
-    val packed =
-      (if (lineagePreserving(m)) lineageScan(m, currentManifest(m), small)
-       else ScanPlanner.scan(spark, m, small, None))
-        .repartition(nOut)
-    val newFiles = writeDataFiles(packed, m)
-    val untouched = cur.filterNot(f => small.exists(_.path == f.path))
-    val hadLive = partitionStats(m).nonEmpty
-    commitSnapshot(m, untouched ++ newFiles, "replace", newFiles.size,
-      extraProperties = lineageMarker(m))
-    refreshPartitionStatsIfLive(hadLive)
-    this
+    rewriteFiles(m, cur, small, "replace")(_.get.repartition(nOut))
   }
 
   /** Range-cluster the table by `cols` (the sort-order analogue of
@@ -2846,20 +2815,11 @@ class GraftTable(val spark: SparkSession, val location: String) {
     if (cur.isEmpty) return this
     val n = if (nFiles > 0) nFiles
       else math.max(1, (cur.map(_.sizeBytes).sum / (128L << 20)).toInt)
-    val src = // defaults-aware rewrite; preserve-mode rides row ids through
-      if (lineagePreserving(m)) lineageScan(m, currentManifest(m), cur)
-      else ScanPlanner.scan(spark, m, cur, None)
-    val sorted = src
-      .repartitionByRange(n, cols.map(col): _*)
-      .sortWithinPartitions(cols.map(col): _*)
     // distribution 'none': a hash-by-partition repartition here would
-    // destroy the range layout this rewrite just produced
-    val newFiles = writeDataFiles(sorted, m, distributionOverride = Some("none"))
-    val hadLive = partitionStats(m).nonEmpty
-    commitSnapshot(m, newFiles, "replace", newFiles.size,
-      extraProperties = lineageMarker(m))
-    refreshPartitionStatsIfLive(hadLive)
-    this
+    // destroy the range layout this rewrite produces
+    rewriteFiles(m, cur, cur, "replace", distribution = Some("none"))(
+      _.get.repartitionByRange(n, cols.map(col): _*)
+        .sortWithinPartitions(cols.map(col): _*))
   }
 
   /** Z-order clustering over two columns (see the N-column overload). */
@@ -2914,41 +2874,35 @@ class GraftTable(val spark: SparkSession, val location: String) {
     val m = meta
     val cur = currentFiles(m)
     if (cur.isEmpty) return this
-    val base = // defaults-aware bounds; preserve-mode rides row ids through
-      if (lineagePreserving(m)) lineageScan(m, currentManifest(m), cur)
-      else ScanPlanner.scan(spark, m, cur, None)
-    val st = base.agg(
-      min(col(cols.head).cast("double")),
-      (Seq(max(col(cols.head).cast("double"))) ++
-        cols.tail.flatMap(c => Seq(min(col(c).cast("double")), max(col(c).cast("double"))))): _*
-    ).head()
-    // an all-null column yields null min/max: treat it as constant (curve
-    // bits 0 for that axis) instead of crashing the rewrite
-    def statAt(i: Int): Double = if (st.isNullAt(i)) 0.0 else st.getDouble(i)
+    rewriteFiles(m, cur, cur, "replace", distribution = Some("none")) { source =>
+      val base = source.get // bounds come from the same scan the rewrite writes
+      val st = base.agg(
+        min(col(cols.head).cast("double")),
+        (Seq(max(col(cols.head).cast("double"))) ++
+          cols.tail.flatMap(c => Seq(min(col(c).cast("double")), max(col(c).cast("double"))))): _*
+      ).head()
+      // an all-null column yields null min/max: treat it as constant (curve
+      // bits 0 for that axis) instead of crashing the rewrite
+      def statAt(i: Int): Double = if (st.isNullAt(i)) 0.0 else st.getDouble(i)
 
-    val bits = math.min(16, 63 / cols.size)
-    val maxVal = (1L << bits) - 1
-    def normBits(c: String, lo: Double, hi: Double): Column =
-      if (hi <= lo) lit(0L)
-      else least(lit(maxVal), greatest(lit(0L),
-        ((col(c).cast("double") - lit(lo)) / lit(hi - lo) * maxVal.toDouble).cast("long")))
+      val bits = math.min(16, 63 / cols.size)
+      val maxVal = (1L << bits) - 1
+      def normBits(c: String, lo: Double, hi: Double): Column =
+        if (hi <= lo) lit(0L)
+        else least(lit(maxVal), greatest(lit(0L),
+          ((col(c).cast("double") - lit(lo)) / lit(hi - lo) * maxVal.toDouble).cast("long")))
 
-    val normed = cols.zipWithIndex.map { case (c, j) =>
-      normBits(c, statAt(2 * j), statAt(2 * j + 1))
+      val normed = cols.zipWithIndex.map { case (c, j) =>
+        normBits(c, statAt(2 * j), statAt(2 * j + 1))
+      }
+      val key = curve(normed, bits)
+      val n = if (nFiles > 0) nFiles
+        else math.max(1, (cur.map(_.sizeBytes).sum / (128L << 20)).toInt)
+      base.withColumn("__curve", key)
+        .repartitionByRange(n, col("__curve"))
+        .sortWithinPartitions(col("__curve"))
+        .drop("__curve")
     }
-    val key = curve(normed, bits)
-    val n = if (nFiles > 0) nFiles
-      else math.max(1, (cur.map(_.sizeBytes).sum / (128L << 20)).toInt)
-    val sorted = base.withColumn("__curve", key)
-      .repartitionByRange(n, col("__curve"))
-      .sortWithinPartitions(col("__curve"))
-      .drop("__curve")
-    val newFiles = writeDataFiles(sorted, m, distributionOverride = Some("none"))
-    val hadLive = partitionStats(m).nonEmpty
-    commitSnapshot(m, newFiles, "replace", newFiles.size,
-      extraProperties = lineageMarker(m))
-    refreshPartitionStatsIfLive(hadLive)
-    this
   }
 
   /** Consolidate or re-cluster the current snapshot's manifests
@@ -3223,7 +3177,7 @@ object GraftTable {
       case (IntegerType, x: Long)   => Some(x.toInt)
       case (LongType, x: Long)      => Some(x)
       case (DateType, x: Long)      => Some(x.toInt) // epoch days
-      case (_: TimestampType | _: TimestampNTZType, x: Long) => Some(x) // micros
+      case (_: TimestampType, x: Long) => Some(x) // micros
       case (FloatType, x: Double)   => Some(x.toFloat)
       case (DoubleType, x: Double)  => Some(x)
       case (d: DecimalType, x: Double) =>

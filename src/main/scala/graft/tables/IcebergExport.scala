@@ -69,19 +69,6 @@ object IcebergExport {
     case n: ObjectNode => o.set(key, n); ()
   }
 
-  /** Iceberg summary operation for a graft commit op: row-preserving
-    * maintenance maps to `replace`, everything that only adds files to
-    * `append`, truncation/deletion to `delete`, and the rest (CoW
-    * rewrites of matched rows) to `overwrite` — the four values the spec
-    * allows.
-    */
-  private[tables] def icebergOp(op: String): String = op match {
-    case "append" | "migrate" | "upsert-mor" | "cherry-pick" => "append"
-    case "delete" | "delete-mor" | "delete-mor-pos" | "delete-mor-eq" => "delete"
-    case "replace" | "rewrite-deletes" => "replace"
-    case _ => "overwrite"
-  }
-
   /** Depth-first Iceberg field-id numbering of a schema's TOP-LEVEL
     * fields — the same ids [[metadataJson]] assigns (nested types consume
     * ids in between, so index+1 would drift).
@@ -337,7 +324,7 @@ object IcebergExport {
       }.getOrElse(None).foreach(p => so.put("parent-snapshot-id", p))
       so.put("timestamp-ms", s.timestampMs)
       val sm = so.putObject("summary")
-      sm.put("operation", icebergOp(s.operation))
+      sm.put("operation", CommitOp.icebergOp(s.operation))
       sm.put("graft.operation", s.operation)
       sm.put("added-data-files", s.addedFiles.toString)
       sm.put("total-data-files", s.totalFiles.toString)

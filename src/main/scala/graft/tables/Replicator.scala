@@ -280,7 +280,7 @@ object TableReplicator {
       //     MOR upserts add their new files' records) — merge directly.
       // An unchanged total on a data op stays ambiguous (pure equality
       // delete, equal-count CoW update) and pays the probe as before.
-      if (snap.operation == "replace" || snap.operation == "rewrite-deletes") {
+      if (CommitOp.RowPreserving(snap.operation)) {
         replica.setProperties(cursor)
       } else {
         val parentTotal = sm.snapshot(parent).map(_.totalRecords).getOrElse(0L)

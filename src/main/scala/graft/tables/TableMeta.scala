@@ -345,6 +345,41 @@ case class Snapshot(
     totalRecords: Long,
     schemaId: Int = 0)
 
+/** The classes of [[Snapshot.operation]] strings, defined once for every
+  * reader that groups commits by what they changed: stats validity, the
+  * changelog, replication, the commit rebase rules and the Iceberg export.
+  */
+object CommitOp {
+
+  /** Commits that change files but no rows: compaction and clustering
+    * (`replace`) and delete-file maintenance (`rewrite-deletes`).
+    */
+  val RowPreserving: Set[String] = Set("replace", "rewrite-deletes")
+
+  /** Merge-on-read deletes: they record deletes beside the data files. */
+  val FilePreserving: Set[String] = Set("delete-mor", "delete-mor-pos", "delete-mor-eq")
+
+  /** Does `s` leave the data-file set unchanged? True for
+    * [[FilePreserving]] ops and for a delete-file compaction that added no
+    * data file (it only folded delete files).
+    */
+  def preservesFiles(s: Snapshot): Boolean =
+    FilePreserving(s.operation) || (s.operation == "rewrite-deletes" && s.addedFiles == 0)
+
+  /** Iceberg summary operation for a graft commit op: row-preserving
+    * maintenance maps to `replace`, everything that only adds files to
+    * `append`, truncation/deletion to `delete`, and the rest (CoW
+    * rewrites of matched rows) to `overwrite` — the four values the spec
+    * allows.
+    */
+  def icebergOp(op: String): String = op match {
+    case "append" | "migrate" | "upsert-mor" | "cherry-pick" => "append"
+    case o if o == "delete" || FilePreserving(o) => "delete"
+    case o if RowPreserving(o) => "replace"
+    case _ => "overwrite"
+  }
+}
+
 /** One entry of the table's schema history (Iceberg `schemas` +
   * `current-schema-id`): every evolution commit appends a new id, and each
   * snapshot records the id it was committed under, so time travel reads a

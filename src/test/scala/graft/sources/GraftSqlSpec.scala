@@ -77,6 +77,27 @@ class GraftSqlSpec extends SparkSpec {
     assert(g.sql("SELECT COUNT(*) AS n FROM r_ice").head().getLong(0) == 0)
   }
 
+  test("DATE range on a TIMESTAMP_NTZ column plans under CBO (year() form as the control)") {
+    import graft.tables.{GraftTable, PartitionField}
+    val g = freshSql()
+    val loc = Files.createTempDirectory("graft_ntz").toString + "/lineitem"
+    val li = spark.range(0, 730).selectExpr(
+      "CAST(date_add(DATE'1995-01-01', CAST(id AS INT)) AS TIMESTAMP_NTZ) AS l_shipdate",
+      "CAST(id AS DECIMAL(12,2)) AS l_extendedprice")
+    GraftTable.createAs(spark, loc, li,
+      Seq(PartitionField("l_shipdate", "months", "l_shipdate_month")))
+    g.register("lineitem", loc)
+    def countSum(where: String): (Long, java.math.BigDecimal) = {
+      val r = g.sql("SELECT count(*) AS n, sum(l_extendedprice) AS s FROM lineitem " +
+        s"WHERE $where").head()
+      (r.getLong(0), r.getDecimal(1))
+    }
+    val control = countSum("year(l_shipdate) = 1995")
+    assert(control._1 == 365L)
+    assert(countSum("l_shipdate >= DATE'1995-01-01' AND l_shipdate < DATE'1996-01-01'") ==
+      control)
+  }
+
   test("time travel + EXECUTE ROLLBACK + EXECUTE EXPIRE_SNAPSHOTS (README time travel)") {
     val g = freshSql(); registerSources(g)
     g.sql("CREATE TABLE tt_ice AS SELECT r_regionkey, r_name FROM region")

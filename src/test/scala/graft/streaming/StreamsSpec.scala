@@ -123,33 +123,6 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("commit conflict is detected, not silently lost") {
-    import graft.tables.GraftTable
-    val loc = java.nio.file.Files.createTempDirectory("graft_conflict").toString + "/t"
-    val df = spark.read.parquet(s"$sf/region.parquet")
-    GraftTable.createAs(spark, loc, df)
-    val t1 = GraftTable.load(spark, loc)
-    val staleMeta = t1.meta
-    GraftTable.load(spark, loc).append(df) // another writer commits
-    intercept[java.util.ConcurrentModificationException] {
-      // t1 still operates on the stale base version
-      val m = staleMeta
-      val method = classOf[graft.tables.GraftTable].getDeclaredMethods
-        .find(_.getName == "commitSnapshot").get
-      method.setAccessible(true)
-      // trailing params are defaults (Option/Seq) — fill by type so the
-      // test survives signature growth
-      val args: Array[AnyRef] = Array[AnyRef](m, Nil, "append", Long.box(0L)) ++
-        method.getParameterTypes.drop(4).map { t =>
-          if (classOf[Option[_]].isAssignableFrom(t)) None
-          else if (classOf[Map[_, _]].isAssignableFrom(t)) Map.empty
-          else Nil
-        }
-      try method.invoke(t1, args: _*)
-      catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
-    }
-  }
-
   test("st03 streaming dedup drops duplicate ids within the watermark") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Timestamp, Double)]

@@ -179,6 +179,60 @@ class ConcurrencySpec extends SparkSpec {
       .as[(Long, String)].collect().toSet.contains((1L, "mine")))
   }
 
+  // Conflict outcome per writer shape: the writer is paused once its
+  // manifests are durable (the `manifests-written` seam), a second handle
+  // lands an append, and the writer's version CAS then loses. An append
+  // rebases onto the winner; every other shape refuses, and the table
+  // keeps the winner's state with none of the loser's rows.
+  private val base = (0L until 20L).map(k => (k, s"v$k"))
+  private val theirs = (50L, "theirs")
+  private val conflictShapes: Seq[(String, GraftTable => GraftTable, Seq[(Long, String)])] = Seq(
+    ("append", _.append(Seq((100L, "mine")).toDF("k", "v")), base :+ (100L -> "mine")),
+    ("CoW delete", _.delete("k % 2 = 0"), Nil),
+    ("MOR positional delete", _.deleteMergeOnReadPositions("k % 2 = 0"), Nil),
+    ("DV delete", _.deleteMergeOnReadDV("k % 2 = 0"), Nil),
+    ("equality delete",
+      _.deleteMergeOnReadEquality((0L until 20L by 2).toDF("k"), Seq("k")), Nil),
+    ("compaction", _.compact(), Nil),
+    ("cluster", _.cluster(Seq("k")), Nil),
+    ("MOR upsert",
+      _.upsertMergeOnRead(Seq((1L, "mine"), (100L, "mine")).toDF("k", "v"), Seq("k")), Nil),
+    ("update", _.update("k < 5", Map("v" -> "'mine'")), Nil),
+    ("mergeInto", _.mergeInto(Seq((1L, "mine"), (100L, "mine")).toDF("k", "v"), Seq("k")), Nil))
+
+  for ((shape, op, rebased) <- conflictShapes) {
+    test(s"append landing mid-commit: $shape " +
+        (if (rebased.nonEmpty) "rebases" else "refuses")) {
+      val loc = tmp()
+      GraftTable.createAs(spark, loc, base.take(10).toDF("k", "v"))
+        .append(base.drop(10).toDF("k", "v"))
+      var fired = 0
+      MetaIO.commitFault = { stage =>
+        if (stage == "manifests-written") {
+          MetaIO.commitFault = null
+          fired += 1
+          GraftTable.load(spark, loc).append(Seq(theirs).toDF("k", "v"))
+        }
+      }
+      val outcome =
+        try scala.util.Try(op(GraftTable.load(spark, loc)))
+        finally MetaIO.commitFault = null
+      assert(fired == 1, s"$shape: the seam fired $fired times")
+      val t = GraftTable.load(spark, loc)
+      val rows = t.toDF().select("k", "v").as[(Long, String)].collect().toSeq.sorted
+      if (rebased.nonEmpty) {
+        assert(outcome.isSuccess, s"$shape: expected a rebase, got $outcome")
+        assert(rows == (rebased :+ theirs).sorted)
+      } else {
+        assert(outcome.failed.toOption.exists(
+          _.isInstanceOf[java.util.ConcurrentModificationException]),
+          s"$shape: expected ConcurrentModificationException, got $outcome")
+        assert(rows == (base :+ theirs).sorted, s"$shape: table is not the winner's")
+        assert(t.meta.currentSnapshot.map(_.operation).contains("append"))
+      }
+    }
+  }
+
   test("mid-flight predicate delete is conflicting for an append (would capture new rows)") {
     val loc = tmp()
     GraftTable.createAs(spark, loc, Seq((1L, "a"), (2L, "b")).toDF("k", "v"))

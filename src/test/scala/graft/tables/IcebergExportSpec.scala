@@ -109,9 +109,9 @@ class IcebergExportSpec extends SparkSpec {
     assert(emb.get("type").get("type").asText() == "list")
     assert(emb.get("type").get("element").asText() == "float")
     // ops map onto the spec's four summary operations
-    assert(IcebergExport.icebergOp("upsert-mor") == "append")
-    assert(IcebergExport.icebergOp("rewrite-deletes") == "replace")
-    assert(IcebergExport.icebergOp("update") == "overwrite")
+    assert(CommitOp.icebergOp("upsert-mor") == "append")
+    assert(CommitOp.icebergOp("rewrite-deletes") == "replace")
+    assert(CommitOp.icebergOp("update") == "overwrite")
   }
 
   test("analyzed tables export the stats file in `statistics` (r9)") {
